@@ -19,7 +19,6 @@ task-level retry storms.
 from __future__ import annotations
 
 import builtins
-from typing import Any, Callable, Optional, Tuple
 
 from pyspark.sql import types as T
 
@@ -53,19 +52,6 @@ def err_dict(exc: BaseException) -> dict:
     }
 
 
-def safe_call(fn: Callable[[Any], Any], element: Any) -> Tuple[Any, Optional[dict]]:
-    """Run fn(element); return (value, None) or (None, err_dict).
-
-    ``StopIteration`` needs no special wrapping here (the reference must wrap
-    it to protect its generator protocol, streamable/util/functiontools.py:7-29;
-    Spark has no generator protocol) but we still record it as data.
-    """
-    try:
-        return fn(element), None
-    except Exception as exc:  # noqa: BLE001 — errors are data by design
-        return None, err_dict(exc)
-
-
 def rebuild_exception(kind: str, message: str) -> BaseException:
     """Best-effort reconstruction of the original exception type for the
     action-time re-raise (builtins only; anything else -> RuntimeError)."""
@@ -76,11 +62,3 @@ def rebuild_exception(kind: str, message: str) -> BaseException:
         except Exception:  # pragma: no cover - exotic constructors
             pass
     return RuntimeError(f"{kind}: {message}")
-
-
-def kind_matches(err_kinds, kind: str) -> bool:
-    """isinstance-style match against the carried MRO names; a bare kind
-    string (legacy structs) falls back to exact-name or catch-all."""
-    if isinstance(err_kinds, str):
-        return kind in ("Exception", "BaseException") or err_kinds == kind
-    return kind in (err_kinds or ())

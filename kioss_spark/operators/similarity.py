@@ -45,17 +45,10 @@ __all__ = [
     "ivf_topk_trained",
     "embed_covariance",
     "train_pq",
+    "train_opq",
     "pq_encode",
     "ivf_pq_topk",
-    "train_pq_residual",
-    "pq_encode_residual",
-    "ivf_pq_residual_topk",
-    "train_opq",
     "opq_rotate_expr",
-    "pq_encode_opq",
-    "ivf_pq_opq_topk",
-    "train_opq_residual",
-    "ivf_pq_opq_residual_topk",
 ]
 
 
@@ -357,6 +350,50 @@ def _dot_py(a, b) -> float:
     return acc
 
 
+def _md5_key() -> Column:
+    """Content-free deterministic order key: the first 15 hex digits of
+    md5(vec_id) as a long — reproducible across runs and engines (the
+    oracles compute the same key), no rand()."""
+    return F.conv(
+        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
+    ).cast("long")
+
+
+def _md5_sample(corpus: DataFrame, n: int) -> list:
+    """The first ``n`` corpus rows (vec_id, v) in md5(vec_id) order — the
+    SQL-expressible (ORDER BY md5 LIMIT n) sample every trainer here
+    draws from. One tiny collect at plan-build time."""
+    return (
+        corpus.orderBy(_md5_key(), F.col("vec_id"))
+        .limit(n)
+        .select("vec_id", "v")
+        .collect()
+    )
+
+
+def _assign_cell(df: DataFrame, cents) -> DataFrame:
+    """Add the nearest-centroid ``cell`` of ``v`` (literal-folded argmin,
+    zero shuffle), sharing one precomputed v·v across the centroid terms."""
+    return (
+        df.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
+        .withColumn(
+            "cell", trained_cells(F.col("v"), cents, nprobe=1, vv=F.col("__vv__"))
+        )
+        .drop("__vv__")
+    )
+
+
+def _probe_cells(df: DataFrame, cents, nprobe: int, *cols) -> DataFrame:
+    """``cols`` plus one row per probed ``cell`` — the ``nprobe`` nearest
+    centroids of ``v`` (query-side multi-probe)."""
+    return df.withColumn("__vv__", _dot(F.col("v"), F.col("v"))).select(
+        *cols,
+        F.explode(
+            trained_cells(F.col("v"), cents, nprobe=nprobe, vv=F.col("__vv__"))
+        ).alias("cell"),
+    )
+
+
 def train_ivf(corpus: DataFrame, n_centroids: int = 16, iters: int = 0):
     """Train a coarse-quantizer centroid table on the corpus; returns
     ``[(cid, [float, ...]), ...]`` (driver-side list — the centroid table
@@ -387,17 +424,7 @@ def train_ivf(corpus: DataFrame, n_centroids: int = 16, iters: int = 0):
     documented exception to declare-then-execute, matching the
     "computed once, broadcast" contract.
     """
-    base = (
-        corpus.orderBy(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long"),
-            F.col("vec_id"),
-        )
-        .limit(n_centroids)
-        .select("vec_id", "v")
-        .collect()
-    )
-    cents = [(i, list(r["v"])) for i, r in enumerate(base)]
+    cents = [(i, list(r["v"])) for i, r in enumerate(_md5_sample(corpus, n_centroids))]
     for _ in range(iters):
         cell = trained_cells(F.col("v"), cents, nprobe=1)
         sums = (
@@ -444,6 +471,26 @@ def _sql_double(x: float) -> str:
     return repr(x) + "D"
 
 
+def _dot_sql(a: str, b: str) -> str:
+    """``_dot`` as a SQL string (same left fold), for expressions rendered
+    whole and parsed with one F.expr call."""
+    return (
+        "aggregate(zip_with(" + a + "," + b + ",(x,y)->x*y),"
+        "CAST(0.0D AS DOUBLE),(acc,x)->acc+x)"
+    )
+
+
+def _arr_sql(xs) -> str:
+    """A literal double array as SQL."""
+    return "array(" + ",".join(_sql_double(x) for x in xs) + ")"
+
+
+def _arr2_sql(rows) -> str:
+    """A literal array of double arrays as SQL (centroid tables, rotation
+    rows) — one F.expr parse instead of thousands of py4j Column calls."""
+    return "array(" + ",".join(_arr_sql(r) for r in rows) + ")"
+
+
 def _sql_col(c) -> str:
     """Render a column reference for embedding in a SQL-string expression.
     Accepts a plain name or a SIMPLE named Column; anything else (computed
@@ -474,20 +521,27 @@ def _dist2_sql(vec_sql: str, cv: list, cc: float, vv_sql: Optional[str] = None) 
     of training and ~1.5s of execution) in the trained-IVF queries. One
     F.expr parse replaces all of it; the parsed plan is the same literal
     arithmetic either way."""
-    arr = "array(" + ",".join(_sql_double(x) for x in cv) + ")"
-    dot = (
-        "aggregate(zip_with(" + vec_sql + "," + arr + ",(x,y)->x*y),"
-        "CAST(0.0D AS DOUBLE),(acc,x)->acc+x)"
-    )
     if vv_sql is None:
-        vv_sql = (
-            "aggregate(zip_with(" + vec_sql + "," + vec_sql + ",(x,y)->x*y),"
-            "CAST(0.0D AS DOUBLE),(acc,x)->acc+x)"
-        )
+        vv_sql = _dot_sql(vec_sql, vec_sql)
     return (
-        "CAST(floor((" + vv_sql + " - 2 * " + dot + " + " + _sql_double(cc)
-        + ") * 1000000) AS BIGINT)"
+        "CAST(floor((" + vv_sql + " - 2 * " + _dot_sql(vec_sql, _arr_sql(cv))
+        + " + " + _sql_double(cc) + ") * 1000000) AS BIGINT)"
     )
+
+
+def _argmin_sql(vec_sql: str, table, vv_sql: Optional[str] = None) -> str:
+    """``array_sort`` over one ``named_struct('d', d2_e6, 'cid', id)`` per
+    literal ``(id, vector)`` row of ``table``: element ``[0]`` is the
+    nearest row (integerized distance, id tiebreak), a ``slice`` of it
+    the nearest few. The one argmin form behind coarse cells, their
+    distances and PQ codes."""
+    structs = [
+        "named_struct('d',"
+        + _dist2_sql(vec_sql, cv, _dot_py(cv, cv), vv_sql)
+        + ",'cid',CAST(" + str(int(cid)) + " AS BIGINT))"
+        for cid, cv in table
+    ]
+    return "array_sort(array(" + ",".join(structs) + "))"
 
 
 def trained_cells(
@@ -506,15 +560,7 @@ def trained_cells(
     ``vec``/``vv`` take a column NAME or a simple named Column; the whole
     argmin tree is rendered as one SQL string and parsed with a single
     F.expr call (see _dist2_sql for why)."""
-    vec_sql = _sql_col(vec)
-    vv_sql = None if vv is None else _sql_col(vv)
-    structs = [
-        "named_struct('d',"
-        + _dist2_sql(vec_sql, cv, _dot_py(cv, cv), vv_sql)
-        + ",'cid',CAST(" + str(int(cid)) + " AS BIGINT))"
-        for cid, cv in centroids
-    ]
-    arr = "array_sort(array(" + ",".join(structs) + "))"
+    arr = _argmin_sql(_sql_col(vec), centroids, None if vv is None else _sql_col(vv))
     if nprobe == 1:
         return F.expr(arr + "[0].cid")
     return F.expr(
@@ -530,15 +576,8 @@ def trained_cell_with_dist(vec, centroids, vv=None) -> Column:
     same d2 rounding contract as the oracle's ``_D2``; because the
     distance VALUE is the output here, ``vv`` must be the true v·v column
     (it is not a shared-term shortcut as in the argmin-only form)."""
-    vec_sql = _sql_col(vec)
     vv_sql = None if vv is None else _sql_col(vv)
-    structs = [
-        "named_struct('d',"
-        + _dist2_sql(vec_sql, cv, _dot_py(cv, cv), vv_sql)
-        + ",'cid',CAST(" + str(int(cid)) + " AS BIGINT))"
-        for cid, cv in centroids
-    ]
-    return F.expr("array_sort(array(" + ",".join(structs) + "))[0]")
+    return F.expr(_argmin_sql(_sql_col(vec), centroids, vv_sql) + "[0]")
 
 
 def ivf_topk_trained(
@@ -572,22 +611,11 @@ def ivf_topk_trained(
     # no-op whenever the scan already yields >= cores splits)
     corpus = spread_scan(corpus)
     cents = train_ivf(corpus, n_centroids=n_centroids, iters=iters)
-    vv = F.col("__vv__")
-    cc = (
-        corpus.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-        .withColumn("cell", trained_cells(F.col("v"), cents, nprobe=1, vv=vv))
-        .drop("__vv__")
-    )
-    qpre = queries.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
+    cc = _assign_cell(corpus, cents)
     if nprobe == 1:
-        qc = qpre.withColumn(
-            "cell", trained_cells(F.col("v"), cents, nprobe=1, vv=vv)
-        ).drop("__vv__")
+        qc = _assign_cell(queries, cents)
     else:
-        qc = qpre.select(
-            "vec_id", "v", "nv",
-            F.explode(trained_cells(F.col("v"), cents, nprobe=nprobe, vv=vv)).alias("cell"),
-        )
+        qc = _probe_cells(queries, cents, nprobe, "vec_id", "v", "nv")
     scored = cc.alias("c").join(F.broadcast(qc.alias("q")), on="cell").select(
         F.col("q.vec_id").alias("query_id"),
         F.col("c.vec_id").alias("cand_id"),
@@ -652,17 +680,9 @@ def semantic_dup_pairs(
     at nprobe=1 → 57.6% at nprobe=2 (RECALL.md; precision stays 1.0 —
     candidates are verified exactly)."""
     cents = train_ivf(vectors, n_centroids=n_centroids, iters=iters)
-    vv = F.col("__vv__")
-    base = vectors.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
     if nprobe == 1:
-        cells = base.withColumn(
-            "cell", trained_cells(F.col("v"), cents, nprobe=1, vv=vv)
-        ).drop("__vv__")
-        return _pairwise_cells(cells, threshold, scorer)
-    cells = base.select(
-        "vec_id", "v", "nv",
-        F.explode(trained_cells(F.col("v"), cents, nprobe=nprobe, vv=vv)).alias("cell"),
-    )
+        return _pairwise_cells(_assign_cell(vectors, cents), threshold, scorer)
+    cells = _probe_cells(vectors, cents, nprobe, "vec_id", "v", "nv")
     pairs = _pairwise_cells(cells, threshold, scorer)
     # a pair sharing several probed cells appears once per shared cell;
     # scores are identical (same vectors), so collapse deterministically
@@ -727,7 +747,6 @@ def ivf_topk_int8(
     # no-op whenever the scan already yields >= cores splits)
     corpus = spread_scan(corpus)
     cents = train_ivf(corpus, n_centroids=n_centroids, iters=0)
-    vv = F.col("__vv__")
 
     def with_codes(df):
         # inline the quantization columns (same expressions as
@@ -740,16 +759,9 @@ def ivf_topk_int8(
         )
         return df.withColumn("scale", scale).withColumn("q", q)
 
-    cc = (
-        with_codes(corpus)
-        .withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-        .withColumn("cell", trained_cells(F.col("v"), cents, nprobe=1, vv=vv))
-        .drop("__vv__")
-    )
-    qpre = with_codes(queries).withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-    qc = qpre.select(
-        "vec_id", "v", "nv", "scale", "q",
-        F.explode(trained_cells(F.col("v"), cents, nprobe=nprobe, vv=vv)).alias("cell"),
+    cc = _assign_cell(with_codes(corpus), cents)
+    qc = _probe_cells(
+        with_codes(queries), cents, nprobe, "vec_id", "v", "nv", "scale", "q"
     )
     dq_q = _dequant(F.col("q.q"), F.col("q.scale"))
     dq_c = _dequant(F.col("c.q"), F.col("c.scale"))
@@ -865,13 +877,10 @@ def cluster_stratified_sample(
     /root/reference/streamable/stream.py distinct/group determinism).
     """
     cents = train_ivf(corpus, n_centroids=n_centroids, iters=iters)
-    h = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
     assigned = corpus.select(
         "vec_id",
         trained_cells(F.col("v"), cents, nprobe=1).alias("cell"),
-        h.alias("h"),
+        _md5_key().alias("h"),
     )
     w = Window.partitionBy("cell").orderBy("h", "vec_id")
     return (
@@ -979,136 +988,19 @@ def ivf_index_ingest(
 # m small codebook indices so the serving tier holds the whole corpus in
 # memory; asymmetric-distance (ADC) lookups score candidates without ever
 # touching the float vectors; an exact rescore column quantifies the error.
+# The ladder composes FAISS-style from two switches ("OPQ,IVF,PQ"): codes
+# quantize v, the residual v − centroid(cell) (Jégou et al. 2011 §III),
+# the rotation R·v (OPQ, Ge et al. 2013), or R·(v − centroid(cell)).
 # ---------------------------------------------------------------------------
-
-
-def train_pq(corpus: DataFrame, m: int = 4, n_codes: int = 16):
-    """Train per-subspace PQ codebooks (Jégou et al. 2011): the embedding
-    is split into ``m`` contiguous subvectors and each subspace gets its
-    own ``n_codes``-entry codebook. Sampling is the SAME deterministic
-    Forgy pick as ``train_ivf`` (first ``n_codes`` corpus vectors in
-    md5(vec_id) order) so every query built on it stays oracle-checkable
-    in SQL — codebook ``j`` is the ``j``-th slice of the sample vectors.
-
-    Returns ``(codebooks, sub)`` where ``codebooks[j]`` is
-    ``[(code, [float, ...]), ...]`` and ``sub`` is the subvector width.
-    Like train_ivf this runs one tiny job at plan-build time; the
-    codebooks (m × n_codes × sub floats — 4 KiB here) travel into plans
-    as literals, so encoding and ADC are pure codegen with ZERO shuffle.
-    """
-    sample = (
-        corpus.orderBy(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long"),
-            F.col("vec_id"),
-        )
-        .limit(n_codes)
-        .select("vec_id", "v")
-        .collect()
-    )
-    dim = len(sample[0]["v"])
-    if dim % m != 0:
-        raise ValueError(f"embedding dim {dim} not divisible by m={m} subspaces")
-    sub = dim // m
-    codebooks = [
-        [(cid, list(r["v"])[j * sub : (j + 1) * sub]) for cid, r in enumerate(sample)]
-        for j in range(m)
-    ]
-    return codebooks, sub
-
-
-def _pq_struct_sql(j: int, sub: int, codebook, vec_sql: str, vv_sql: str) -> str:
-    """argmin (d2_e6, code) struct over one subspace's literal codebook —
-    same array_sort(named_struct) form as trained_cell_with_dist, on
-    ``slice(vec, j*sub+1, sub)``."""
-    sl = f"slice({vec_sql},{j * sub + 1},{sub})"
-    structs = [
-        "named_struct('d',"
-        + _dist2_sql(sl, cv, _dot_py(cv, cv), vv_sql)
-        + ",'cid',CAST(" + str(int(cid)) + " AS BIGINT))"
-        for cid, cv in codebook
-    ]
-    return "array_sort(array(" + ",".join(structs) + "))[0]"
-
-
-def _with_sub_vv(df: DataFrame, m: int, sub: int, vec_col: str = "v") -> DataFrame:
-    """Precompute each subvector's self-dot (__pvv{j}__) once per row —
-    shared across that subspace's n_codes distance terms (the vv seam
-    trained_cells uses, per subspace; the VALUE feeds the output so it
-    must be the true subvector dot, and it is).
-
-    ONE withColumns call, not m withColumn calls: every withColumn on a
-    plan carrying literal codebooks re-analyzes the whole plan (~50 ms
-    each at m=4..16 measured on ann_pq_opq's build) — batching the
-    independent projections is the same plan for one analysis pass."""
-    exprs = {}
-    for j in range(m):
-        sl = f"slice({vec_col},{j * sub + 1},{sub})"
-        exprs[f"__pvv{j}__"] = F.expr(
-            "aggregate(zip_with(" + sl + "," + sl + ",(x,y)->x*y),"
-            "CAST(0.0D AS DOUBLE),(acc,x)->acc+x)"
-        )
-    return df.withColumns(exprs)
-
-
-def _attach_pq_codes(df: DataFrame, codebooks, sub: int, vec_col: str) -> DataFrame:
-    """Shared PQ-encode core over an already-materialized, simply-named
-    vector column: per-subspace literal-codebook argmin codes c0..c{m-1}
-    plus ``recon_err_e6`` (sum of the m floored squared distances to the
-    chosen codewords). Pure literal-folded column algebra — zero shuffle."""
-    m = len(codebooks)
-    out = _with_sub_vv(df, m, sub, vec_col)
-    # three batched projections (argmin structs -> err+codes -> drop)
-    # instead of ~3m chained withColumn/drop calls — each chained call
-    # re-analyzes the literal-codebook plan (see _with_sub_vv)
-    out = out.withColumns({
-        f"__pq{j}__": F.expr(
-            _pq_struct_sql(j, sub, cb, vec_col, f"__pvv{j}__")
-        )
-        for j, cb in enumerate(codebooks)
-    })
-    err_cols = [F.col(f"__pq{j}__.d") for j in range(m)]
-    total = err_cols[0]
-    for e in err_cols[1:]:
-        total = total + e
-    final = {"recon_err_e6": total.cast("long")}
-    for j in range(m):
-        final[f"c{j}"] = F.col(f"__pq{j}__.cid")
-    out = out.withColumns(final)
-    return out.drop(
-        *[f"__pq{j}__" for j in range(m)],
-        *[f"__pvv{j}__" for j in range(m)],
-    )
-
-
-def pq_encode(
-    df: DataFrame, codebooks, sub: int, vec_col: str = "v"
-) -> DataFrame:
-    """Attach PQ code columns ``c0..c{m-1}`` and the integerized
-    reconstruction error ``recon_err_e6`` (sum of the m per-subspace
-    floored squared distances to the chosen codeword — the compression-
-    quality audit every vector store tracks, the PQ analog of
-    quantize_int8's roundtrip error). Pure literal-folded column algebra:
-    narrow, zero shuffle, partitioned exactly like the input scan."""
-    return _attach_pq_codes(df, codebooks, sub, vec_col)
 
 
 def _cents_arr_sql(cents) -> str:
     """The centroid table as ONE literal array-of-arrays ordered by cid,
-    for ``element_at(..., cell + 1)`` lookups inside residual expressions
-    (the same render-as-SQL-string discipline as _dist2_sql: one F.expr
-    parse instead of thousands of py4j Column calls)."""
+    for ``element_at(..., cell + 1)`` lookups inside residual expressions."""
     ordered = sorted(cents, key=lambda t: t[0])
     if [cid for cid, _ in ordered] != list(range(len(ordered))):
         raise ValueError("centroid ids must be contiguous 0..n-1 for element_at lookup")
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(_sql_double(x) for x in cv) + ")"
-            for _, cv in ordered
-        )
-        + ")"
-    )
+    return _arr2_sql(cv for _, cv in ordered)
 
 
 def _assign_cell_py(v, cents):
@@ -1126,261 +1018,62 @@ def _assign_cell_py(v, cents):
     return best[1]
 
 
-def train_pq_residual(
-    corpus: DataFrame, cents, m: int = 4, n_codes: int = 16,
+def _train_sample(corpus: DataFrame, n: int, cents=None, offset: Optional[int] = None):
+    """Up to ``n`` training vectors: md5-order corpus rows after skipping
+    the first ``offset`` (default ``len(cents)`` with ``cents``, else 0).
+    With ``cents`` each vector becomes its coarse residual
+    ``v − centroid(cell(v))``, computed driver-side with the engines' exact
+    argmin (_assign_cell_py). Why the offset: the coarse Forgy sample's
+    own residuals are identically zero — each sample vector IS its nearest
+    centroid — so training on the offset slice keeps residual codebooks
+    non-degenerate while staying SQL-expressible (ORDER BY md5 LIMIT n
+    OFFSET o)."""
+    if offset is None:
+        offset = 0 if cents is None else len(cents)
+    rows = [list(r["v"]) for r in _md5_sample(corpus, offset + n)[offset:]]
+    if cents is None:
+        return rows
+    return [[x - y for x, y in zip(v, _assign_cell_py(v, cents))] for v in rows]
+
+
+def train_pq(
+    corpus: DataFrame, m: int = 4, n_codes: int = 16, cents=None,
     offset: Optional[int] = None,
 ):
-    """Train per-subspace RESIDUAL codebooks — true IVFPQ (Jégou et al.
-    2011 §III): codewords quantize ``v − coarse_centroid(cell(v))``, not
-    ``v``, so the same bit budget spends itself on the (much smaller)
-    within-cell displacement instead of re-describing the cell location
-    the coarse index already knows.
+    """Train per-subspace PQ codebooks (Jégou et al. 2011): the embedding
+    is split into ``m`` contiguous subvectors and each subspace gets its
+    own ``n_codes``-entry codebook — the ``j``-th slices of the sample
+    vectors. The sample is the SAME deterministic Forgy pick as
+    ``train_ivf`` (first corpus vectors in md5(vec_id) order) so every
+    query built on it stays oracle-checkable in SQL.
 
-    The sample is the ``n_codes`` corpus vectors in md5(vec_id) order
-    AFTER skipping the first ``offset`` (default ``len(cents)``): the
-    coarse Forgy sample's own residuals are identically zero — each
-    sample vector IS its nearest centroid — so training on the offset
-    slice is what makes the residual codebooks non-degenerate while
-    staying fully SQL-expressible (ORDER BY md5 LIMIT n OFFSET o).
+    ``cents`` trains RESIDUAL codebooks — true IVFPQ (§III): codewords
+    quantize ``v − coarse_centroid(cell(v))``, so the same bit budget
+    spends itself on the (much smaller) within-cell displacement instead
+    of re-describing the cell the coarse index already knows; the sample
+    skips ``offset`` rows (see _train_sample).
 
-    Like train_pq this is one tiny plan-build-time job; each sampled
-    vector's residual is computed driver-side with the engines' exact
-    argmin/IEEE semantics (_assign_cell_py). Returns ``(codebooks, sub)``
-    in the train_pq shape, codebook entries being residual vectors.
+    Returns ``(codebooks, sub)`` where ``codebooks[j]`` is
+    ``[(code, [float, ...]), ...]`` and ``sub`` is the subvector width.
+    Like train_ivf this runs one tiny job at plan-build time; the
+    codebooks (m × n_codes × sub floats — 4 KiB here) travel into plans
+    as literals, so encoding and ADC are pure codegen with ZERO shuffle.
     """
-    if offset is None:
-        offset = len(cents)
-    sample = (
-        corpus.orderBy(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long"),
-            F.col("vec_id"),
-        )
-        .limit(offset + n_codes)
-        .select("vec_id", "v")
-        .collect()
-    )[offset:]
+    sample = _train_sample(corpus, n_codes, cents, offset)
     if len(sample) < n_codes:
         raise ValueError(
-            f"corpus holds only {offset + len(sample)} vectors; need "
-            f"{offset + n_codes} for an offset-{offset} residual sample"
+            f"corpus holds only {len(sample)} vectors past the sample "
+            f"offset; need {n_codes}"
         )
-    dim = len(sample[0]["v"])
+    dim = len(sample[0])
     if dim % m != 0:
         raise ValueError(f"embedding dim {dim} not divisible by m={m} subspaces")
     sub = dim // m
-    residuals = []
-    for r in sample:
-        v = list(r["v"])
-        cv = _assign_cell_py(v, cents)
-        residuals.append([x - y for x, y in zip(v, cv)])
     codebooks = [
-        [(cid, rv[j * sub : (j + 1) * sub]) for cid, rv in enumerate(residuals)]
+        [(cid, v[j * sub : (j + 1) * sub]) for cid, v in enumerate(sample)]
         for j in range(m)
     ]
     return codebooks, sub
-
-
-def pq_encode_residual(
-    df: DataFrame, cents, codebooks, sub: int, vec_col: str = "v"
-) -> DataFrame:
-    """Residual-PQ encoding: literal-argmin cell assignment, residual
-    ``v − centroid[cell]`` via one element_at lookup into the literal
-    centroid array, then the shared per-subspace argmin over the RESIDUAL
-    codebooks. Adds ``cell``, ``c0..c{m-1}`` and ``recon_err_e6`` (now
-    measuring residual reconstruction — directly comparable to
-    pq_encode's at equal bits). Still pure literal-folded column algebra:
-    narrow, ZERO shuffle at any corpus size."""
-    arr = _cents_arr_sql(cents)
-    vec_sql = _sql_col(vec_col)
-    out = df.withColumn(
-        "__cvv__",
-        F.expr(
-            "aggregate(zip_with(" + vec_sql + "," + vec_sql + ",(x,y)->x*y),"
-            "CAST(0.0D AS DOUBLE),(acc,x)->acc+x)"
-        ),
-    )
-    out = out.withColumn(
-        "cell", trained_cells(F.col(vec_col), cents, nprobe=1, vv=F.col("__cvv__"))
-    ).drop("__cvv__")
-    out = out.withColumn(
-        "__rv__",
-        F.expr(
-            f"zip_with({vec_sql}, element_at({arr}, CAST(cell AS INT) + 1),"
-            "(x,y)->x-y)"
-        ),
-    )
-    return _attach_pq_codes(out, codebooks, sub, "__rv__").drop("__rv__")
-
-
-def ivf_pq_residual_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    m: int = 4,
-    n_codes: int = 16,
-    n_centroids: int = 16,
-    nprobe: int = 3,
-    iters: int = 0,
-) -> DataFrame:
-    """The residual-IVFPQ serving path — ``ivf_pq_topk`` upgraded to true
-    IVFPQ (Jégou et al. 2011 §III): candidates store residual codes
-    (pq_encode_residual) and each (query, probed cell) pair precomputes
-    its ADC distance tables on the QUERY RESIDUAL ``q − centroid(cell)``
-    for that cell — the subtraction folds into the same broadcast-side
-    literal expressions, so the upgrade adds zero shuffles and zero
-    per-candidate arithmetic: candidates still pay m element_at lookups.
-
-    Returns (query_id, cand_id, adc_d2_e6, score_exact_e5, rnk), rnk <= k
-    — the ivf_pq_topk schema, so the two serving paths A/B directly.
-    Shuffle profile identical: one cell equi-join against the broadcast
-    query side, one per-query rank window. ``iters`` Lloyd-refines the
-    coarse quantizer — ON-MEAN centroids shrink residual norms, which is
-    where residual PQ earns its keep (measured in RECALL.md); 0 stays the
-    Forgy oracle-checkable default."""
-    # corpus-side encode/score expressions fuse into the corpus
-    # scan stage: spread a narrow (single-split) scan across the
-    # cores first or they evaluate on ONE task (guide §2.5;
-    # no-op whenever the scan already yields >= cores splits)
-    corpus = spread_scan(corpus)
-    cents = train_ivf(corpus, n_centroids=n_centroids, iters=iters)
-    codebooks, sub = train_pq_residual(corpus, cents, m=m, n_codes=n_codes)
-    arr = _cents_arr_sql(cents)
-
-    cc = pq_encode_residual(corpus, cents, codebooks, sub).select(
-        "vec_id", "v", "nv", "cell", *[f"c{j}" for j in range(m)]
-    )
-    vv = F.col("__vv__")
-    qpre = queries.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-    qc = qpre.select(
-        F.col("vec_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.explode(trained_cells(F.col("v"), cents, nprobe=nprobe, vv=vv)).alias("cell"),
-    )
-    # per-probe query residual: one element_at into the literal centroid
-    # array — each (query, cell) row gets its own distance tables below,
-    # exactly the per-cell table structure real IVFPQ serving uses
-    qc = qc.withColumn(
-        "__qr__",
-        F.expr(f"zip_with(qv, element_at({arr}, CAST(cell AS INT) + 1),(x,y)->x-y)"),
-    )
-    qc = _with_sub_vv(qc, m, sub, "__qr__")
-    adc_cols = {}
-    for j, cb in enumerate(codebooks):
-        sl = f"slice(__qr__,{j * sub + 1},{sub})"
-        d2s = ",".join(
-            _dist2_sql(sl, cv, _dot_py(cv, cv), f"__pvv{j}__") for _, cv in cb
-        )
-        adc_cols[f"__adc{j}__"] = F.expr(f"array({d2s})")
-    # one analysis pass for all m ADC tables (see _with_sub_vv)
-    qc = qc.withColumns(adc_cols)
-    qc = qc.drop("__qr__", *[f"__pvv{j}__" for j in range(m)])
-    adc = F.expr(
-        " + ".join(
-            f"element_at(__adc{j}__, CAST(c{j} AS INT) + 1)" for j in range(m)
-        )
-    )
-    scored = cc.alias("c").join(F.broadcast(qc.alias("q")), on="cell").select(
-        F.col("q.vec_id").alias("query_id"),
-        F.col("c.vec_id").alias("cand_id"),
-        adc.cast("long").alias("adc_d2_e6"),
-        F.floor(
-            _dot(F.col("q.qv"), F.col("c.v")) / (F.col("q.qnv") * F.col("c.nv")) * 100000
-        ).cast("long").alias("score_exact_e5"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2_e6"), F.col("cand_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
-
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    m: int = 4,
-    n_codes: int = 16,
-    n_centroids: int = 16,
-    nprobe: int = 3,
-    iters: int = 0,
-) -> DataFrame:
-    """The IVFPQ serving path: trained-IVF candidate pruning (literal-
-    folded cell assignment, query-side multi-probe) + PQ-code asymmetric
-    distance (ADC) scoring + exact-float rescore column. This is the
-    memory-bound regime's answer: the serving tier stores m bytes of
-    codes per vector instead of 4·dim, each query precomputes its
-    per-subspace distance-to-codeword tables, and candidate scoring is m
-    array lookups — here ``element_at`` over the m×n_codes literal d2
-    expressions, summed. Ranked by ADC distance ascending;
-    ``score_exact_e5`` (true cosine) rides along to expose the accepted
-    approximation error (the PQ twin of ivf_topk_int8's rescore).
-
-    Returns (query_id, cand_id, adc_d2_e6, score_exact_e5, rnk), rnk <= k.
-    Shuffle profile: identical to ivf_topk_trained — one cell equi-join
-    with the broadcast query side, one per-query rank window; encoding
-    and ADC add zero shuffles. ``iters`` Lloyd-refines the coarse
-    quantizer before encoding (0 = Forgy default, the oracle-checkable
-    config)."""
-    # corpus-side encode/score expressions fuse into the corpus
-    # scan stage: spread a narrow (single-split) scan across the
-    # cores first or they evaluate on ONE task (guide §2.5;
-    # no-op whenever the scan already yields >= cores splits)
-    corpus = spread_scan(corpus)
-    cents = train_ivf(corpus, n_centroids=n_centroids, iters=iters)
-    codebooks, sub = train_pq(corpus, m=m, n_codes=n_codes)
-
-    vv = F.col("__vv__")
-    cc = (
-        pq_encode(corpus, codebooks, sub)
-        .withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-        .withColumn("cell", trained_cells(F.col("v"), cents, nprobe=1, vv=vv))
-        .drop("__vv__")
-        .select("vec_id", "v", "nv", "cell", *[f"c{j}" for j in range(m)])
-    )
-    qpre = queries.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-    qc = qpre.select(
-        F.col("vec_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.explode(trained_cells(F.col("v"), cents, nprobe=nprobe, vv=vv)).alias("cell"),
-    )
-    qc = _with_sub_vv(qc, m, sub, "qv")
-    # ADC's defining move: each query materializes its distance table to
-    # EVERY codeword of every subspace ONCE, on the (tiny, broadcast)
-    # query side — m array columns of n_codes entries per query row.
-    # Candidates then pay m element_at LOOKUPS into the broadcast row.
-    # (Inlining the arrays into the post-join projection instead would
-    # re-evaluate all m*n_codes distance expressions PER CANDIDATE —
-    # n_codes/m times the arithmetic ADC exists to avoid.)
-    adc_cols = {}
-    for j, cb in enumerate(codebooks):
-        sl = f"slice(qv,{j * sub + 1},{sub})"
-        d2s = ",".join(
-            _dist2_sql(sl, cv, _dot_py(cv, cv), f"__pvv{j}__") for _, cv in cb
-        )
-        adc_cols[f"__adc{j}__"] = F.expr(f"array({d2s})")
-    # one analysis pass for all m ADC tables (see _with_sub_vv)
-    qc = qc.withColumns(adc_cols)
-    qc = qc.drop(*[f"__pvv{j}__" for j in range(m)])
-    adc = F.expr(
-        " + ".join(
-            f"element_at(__adc{j}__, CAST(c{j} AS INT) + 1)" for j in range(m)
-        )
-    )
-    scored = cc.alias("c").join(F.broadcast(qc.alias("q")), on="cell").select(
-        F.col("q.vec_id").alias("query_id"),
-        F.col("c.vec_id").alias("cand_id"),
-        adc.cast("long").alias("adc_d2_e6"),
-        F.floor(
-            _dot(F.col("q.qv"), F.col("c.v")) / (F.col("q.qnv") * F.col("c.nv")) * 100000
-        ).cast("long").alias("score_exact_e5"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2_e6"), F.col("cand_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
-
-
-# ---------------------------------------------------------------------------
-# Optimized Product Quantization (Ge et al. 2013)
-# ---------------------------------------------------------------------------
 
 
 def train_opq(
@@ -1391,6 +1084,8 @@ def train_opq(
     opq_iters: int = 10,
     lloyd_iters: int = 4,
     decimals: int = 6,
+    cents=None,
+    offset: Optional[int] = None,
 ):
     """Train an OPQ rotation + rotated-space codebooks (Ge et al. 2013,
     "Optimized Product Quantization", the non-parametric alternating
@@ -1414,36 +1109,19 @@ def train_opq(
     model is self-consistent. Returns ``(R, codebooks, sub)`` with
     ``codebooks`` in the train_pq shape (rotated-space codewords).
 
+    ``cents`` fits the FULL FAISS-style composition's model — "OPQ,IVF,PQ":
+    rotation and codebooks on coarse-quantizer RESIDUALS (rotated residual
+    R·(v − c) == R·v − R·c, so rotating the residual is exactly serving
+    the rotated corpus against rotated centroids); the sample skips
+    ``offset`` rows, as train_pq's residual form does.
+
     Serving-path exactness does not depend on the trainer: R and the
     codebooks travel as plan literals (and as literals inside the DuckDB
     oracle), so both engines compute identical doubles whatever numpy
     produced."""
-    sample = (
-        corpus.orderBy(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long"),
-            F.col("vec_id"),
-        )
-        .limit(sample_n)
-        .select("vec_id", "v")
-        .collect()
-    )
-    return _opq_alternate(
-        [list(r["v"]) for r in sample], m, n_codes, opq_iters, lloyd_iters,
-        decimals,
-    )
-
-
-def _opq_alternate(rows, m, n_codes, opq_iters, lloyd_iters, decimals):
-    """The non-parametric OPQ alternating core over a driver-side sample
-    matrix: [fit per-subspace Lloyd codebooks on the rotated sample ->
-    orthogonal-Procrustes solve for R], then round R and RE-FIT the
-    codebooks under the rounded R so the returned model is
-    self-consistent. Shared by train_opq (raw vectors) and
-    train_opq_residual (coarse residuals)."""
     import numpy as np
 
-    X = np.array(rows, dtype=np.float64)
+    X = np.array(_train_sample(corpus, sample_n, cents, offset), dtype=np.float64)
     if len(X) < n_codes:
         raise ValueError(f"sample holds only {len(X)} vectors; need >= {n_codes}")
     dim = X.shape[1]
@@ -1485,91 +1163,107 @@ def _opq_alternate(rows, m, n_codes, opq_iters, lloyd_iters, decimals):
     return [[float(x) for x in row] for row in R], codebooks, sub
 
 
-def train_opq_residual(
-    corpus: DataFrame,
-    cents,
-    m: int = 4,
-    n_codes: int = 16,
-    sample_n: int = 256,
-    opq_iters: int = 10,
-    lloyd_iters: int = 4,
-    decimals: int = 6,
-    offset: Optional[int] = None,
-):
-    """Train the FULL FAISS-style composition's model — "OPQ,IVF,PQ":
-    an OPQ rotation + codebooks fit on coarse-quantizer RESIDUALS
-    (rotated residual R·(v − c) == R·v − R·c, so rotating the residual
-    is exactly serving the rotated corpus against rotated centroids).
-    The sample skips the first ``offset`` md5-order rows (default
-    ``len(cents)``) for the same reason train_pq_residual does: the
-    coarse Forgy sample's own residuals are identically zero. Residuals
-    are computed driver-side with the engines' exact argmin semantics
-    (_assign_cell_py), then the shared OPQ alternating core runs on the
-    residual matrix. Returns ``(R, codebooks, sub)``."""
-    if offset is None:
-        offset = len(cents)
-    sample = (
-        corpus.orderBy(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long"),
-            F.col("vec_id"),
-        )
-        .limit(offset + sample_n)
-        .select("vec_id", "v")
-        .collect()
-    )[offset:]
-    residuals = []
-    for r in sample:
-        v = list(r["v"])
-        cv = _assign_cell_py(v, cents)
-        residuals.append([x - y for x, y in zip(v, cv)])
-    return _opq_alternate(
-        residuals, m, n_codes, opq_iters, lloyd_iters, decimals
-    )
-
-
-def _rot_arr_sql(R) -> str:
-    """The rotation as ONE literal array-of-row-arrays (the _cents_arr_sql
-    discipline: render as a SQL string, not py4j Column trees)."""
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(_sql_double(x) for x in row) + ")"
-            for row in R
-        )
-        + ")"
-    )
-
-
 def opq_rotate_expr(R, vec_sql: str) -> str:
     """``R · v`` as pure column algebra: transform over the literal rows,
     each component the same left-fold dot the whole ANN family uses — so
     the rotated doubles match DuckDB's ``list_transform(rr, r ->
     list_dot_product(r, v))`` to the last ulp."""
-    return (
-        f"transform({_rot_arr_sql(R)}, r -> "
-        f"aggregate(zip_with(r, {vec_sql}, (x,y)->x*y), "
-        "CAST(0.0D AS DOUBLE), (acc,x)->acc+x))"
+    return f"transform({_arr2_sql(R)}, r -> {_dot_sql('r', vec_sql)})"
+
+
+def _with_sub_vv(df: DataFrame, m: int, sub: int, vec_col: str = "v") -> DataFrame:
+    """Precompute each subvector's self-dot (__pvv{j}__) once per row —
+    shared across that subspace's n_codes distance terms (the vv seam
+    trained_cells uses, per subspace; the VALUE feeds the output so it
+    must be the true subvector dot, and it is).
+
+    ONE withColumns call, not m withColumn calls: every withColumn on a
+    plan carrying literal codebooks re-analyzes the whole plan (~50 ms
+    each at m=4..16 measured on ann_pq_opq's build) — batching the
+    independent projections is the same plan for one analysis pass."""
+    exprs = {}
+    for j in range(m):
+        sl = f"slice({vec_col},{j * sub + 1},{sub})"
+        exprs[f"__pvv{j}__"] = F.expr(_dot_sql(sl, sl))
+    return df.withColumns(exprs)
+
+
+def _derive_vec(df: DataFrame, vec: str, cents, R, res_col: str, rot_col: str):
+    """The per-side vector PQ quantizes: ``vec``, minus ``centroid[cell]``
+    when ``cents`` is given (one element_at into the literal centroid
+    array, keyed by the row's ``cell``), then rotated by ``R`` when given.
+    Returns ``(df, column holding the vector, helper columns to drop)``."""
+    tmp = []
+    if cents is not None:
+        df = df.withColumn(
+            res_col,
+            F.expr(
+                f"zip_with({vec}, element_at({_cents_arr_sql(cents)}, "
+                "CAST(cell AS INT) + 1),(x,y)->x-y)"
+            ),
+        )
+        vec = res_col
+        tmp.append(vec)
+    if R is not None:
+        df = df.withColumn(rot_col, F.expr(opq_rotate_expr(R, vec)))
+        vec = rot_col
+        tmp.append(vec)
+    return df, vec, tmp
+
+
+def pq_encode(
+    df: DataFrame, codebooks, sub: int, vec_col: str = "v", cents=None, R=None
+) -> DataFrame:
+    """Attach PQ code columns ``c0..c{m-1}`` and the integerized
+    reconstruction error ``recon_err_e6`` (sum of the m per-subspace
+    floored squared distances to the chosen codeword — the compression-
+    quality audit every vector store tracks, the PQ analog of
+    quantize_int8's roundtrip error).
+
+    ``cents`` encodes the RESIDUAL: it assigns ``cell`` (literal argmin,
+    also added to the output) and quantizes ``v − centroid[cell]`` under
+    residual codebooks (train_pq/train_opq with ``cents``). ``R`` rotates
+    the vector (or residual) before quantizing — OPQ; its error is
+    directly comparable to the unrotated one at equal bits because R is
+    orthonormal. Pure literal-folded column algebra: narrow, zero shuffle,
+    partitioned exactly like the input scan."""
+    vec = _sql_col(vec_col)
+    out = df
+    if cents is not None:
+        out = out.withColumn("__cvv__", F.expr(_dot_sql(vec, vec)))
+        out = out.withColumn(
+            "cell", trained_cells(F.col(vec_col), cents, nprobe=1, vv=F.col("__cvv__"))
+        ).drop("__cvv__")
+    out, vec, tmp = _derive_vec(
+        out, vec, cents, R, "__rv__", "__ov__" if cents is None else "__orv__"
+    )
+    m = len(codebooks)
+    out = _with_sub_vv(out, m, sub, vec)
+    # three batched projections (argmin structs -> err+codes -> drop)
+    # instead of ~3m chained withColumn/drop calls — each chained call
+    # re-analyzes the literal-codebook plan (see _with_sub_vv)
+    out = out.withColumns({
+        f"__pq{j}__": F.expr(
+            _argmin_sql(f"slice({vec},{j * sub + 1},{sub})", cb, f"__pvv{j}__")
+            + "[0]"
+        )
+        for j, cb in enumerate(codebooks)
+    })
+    total = F.col("__pq0__.d")
+    for j in range(1, m):
+        total = total + F.col(f"__pq{j}__.d")
+    final = {"recon_err_e6": total.cast("long")}
+    for j in range(m):
+        final[f"c{j}"] = F.col(f"__pq{j}__.cid")
+    out = out.withColumns(final)
+    return out.drop(
+        *[f"__pq{j}__" for j in range(m)],
+        *[f"__pvv{j}__" for j in range(m)],
+        *tmp,
     )
 
 
-def pq_encode_opq(
-    df: DataFrame, R, codebooks, sub: int, vec_col: str = "v"
-) -> DataFrame:
-    """OPQ encoding: rotate ``v`` by the literal R, then the shared
-    per-subspace argmin over the ROTATED-space codebooks (the
-    pq_encode_residual seam with the residual subtraction swapped for a
-    matvec). Adds ``c0..c{m-1}`` and ``recon_err_e6`` (rotated-space
-    reconstruction error — directly comparable to pq_encode's at equal
-    bits because R is orthonormal: distances are rotation-invariant).
-    Pure literal-folded column algebra: narrow, ZERO shuffle at any
-    corpus size."""
-    vec_sql = _sql_col(vec_col)
-    out = df.withColumn("__ov__", F.expr(opq_rotate_expr(R, vec_sql)))
-    return _attach_pq_codes(out, codebooks, sub, "__ov__").drop("__ov__")
-
-
-def ivf_pq_opq_topk(
+def ivf_pq_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
@@ -1578,165 +1272,90 @@ def ivf_pq_opq_topk(
     n_centroids: int = 16,
     nprobe: int = 3,
     iters: int = 0,
+    residual: bool = False,
+    opq: bool = False,
     model=None,
 ) -> DataFrame:
-    """The OPQ rung of the PQ serving ladder: ivf_pq_topk with both sides
-    rotated by the learned R before quantization/ADC. Coarse cells stay
-    on the ORIGINAL vectors (identical candidate sets to the raw and
-    residual paths — the three ladders A/B at equal bits on the same
-    candidates), codes quantize ``R·v``, and each query's ADC tables are
-    built on ``R·q`` — valid because R is orthonormal, so rotated-space
-    distances ARE original-space distances.
+    """The IVFPQ serving path: trained-IVF candidate pruning (literal-
+    folded cell assignment, query-side multi-probe) + PQ-code asymmetric
+    distance (ADC) scoring + exact-float rescore column. This is the
+    memory-bound regime's answer: the serving tier stores m bytes of
+    codes per vector instead of 4·dim, each query precomputes its
+    per-subspace distance-to-codeword tables, and candidate scoring is m
+    array lookups — here ``element_at`` over the m×n_codes literal d2
+    expressions, summed. Ranked by ADC distance ascending;
+    ``score_exact_e5`` (true cosine) rides along to expose the accepted
+    approximation error (the PQ twin of ivf_topk_int8's rescore).
 
-    ``model`` is a trained ``(R, codebooks, sub)`` (the frozen-literals
-    deployment: train once offline, serve everywhere); None trains on
-    ``corpus`` via train_opq. Returns the ivf_pq_topk schema
-    (query_id, cand_id, adc_d2_e6, score_exact_e5, rnk). Shuffle profile
-    identical: one cell equi-join against the broadcast query side, one
-    per-query rank window — the rotation folds into the same broadcast-
-    side literal codegen, zero added shuffles."""
+    The rung is two switches over the vector both sides quantize:
+    ``residual`` codes ``v − centroid(cell)`` and builds each (query,
+    probed cell) pair's ADC tables on the query residual for THAT cell —
+    true IVFPQ (Jégou et al. 2011 §III); ``opq`` rotates by a learned
+    orthonormal R first (Ge et al. 2013), valid because rotated-space
+    distances ARE original-space distances. Both together are FAISS's
+    "OPQ,IVF,PQ". Coarse cells always stay on the ORIGINAL vectors, so
+    every rung scores identical candidates and the ladder A/Bs at equal
+    bits.
+
+    ``model`` is a trained ``(R, codebooks, sub)`` — R None unless
+    ``opq`` — from train_pq/train_opq (with ``cents`` for residual rungs):
+    the frozen-literals deployment, train once offline and serve
+    everywhere; None trains on ``corpus``. ``iters`` Lloyd-refines the
+    coarse quantizer — ON-MEAN centroids shrink residual norms, which is
+    where residual PQ earns its keep (RECALL.md); 0 stays the Forgy
+    oracle-checkable default.
+
+    Returns (query_id, cand_id, adc_d2_e6, score_exact_e5, rnk), rnk <= k.
+    Shuffle profile: identical to ivf_topk_trained on every rung — one
+    cell equi-join with the broadcast query side, one per-query rank
+    window; encoding, residuals, rotation and ADC fold into literal
+    codegen and add zero shuffles."""
+    if model is not None and (model[0] is not None) != opq:
+        raise ValueError("model carries a rotation exactly when opq=True")
     # corpus-side encode/score expressions fuse into the corpus
     # scan stage: spread a narrow (single-split) scan across the
     # cores first or they evaluate on ONE task (guide §2.5;
     # no-op whenever the scan already yields >= cores splits)
     corpus = spread_scan(corpus)
-    if model is None:
-        R, codebooks, sub = train_opq(corpus, m=m, n_codes=n_codes)
-    else:
-        R, codebooks, sub = model
-        m = len(codebooks)
     cents = train_ivf(corpus, n_centroids=n_centroids, iters=iters)
+    fit_cents = cents if residual else None
+    if model is None and opq:
+        model = train_opq(corpus, m=m, n_codes=n_codes, cents=fit_cents)
+    elif model is None:
+        model = (None, *train_pq(corpus, m=m, n_codes=n_codes, cents=fit_cents))
+    R, codebooks, sub = model
+    m = len(codebooks)
 
-    vv = F.col("__vv__")
-    cc = (
-        pq_encode_opq(corpus, R, codebooks, sub)
-        .withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-        .withColumn("cell", trained_cells(F.col("v"), cents, nprobe=1, vv=vv))
-        .drop("__vv__")
-        .select("vec_id", "v", "nv", "cell", *[f"c{j}" for j in range(m)])
-    )
-    qpre = queries.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-    qc = qpre.select(
-        F.col("vec_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.explode(trained_cells(F.col("v"), cents, nprobe=nprobe, vv=vv)).alias("cell"),
-    )
-    qc = qc.withColumn("__oq__", F.expr(opq_rotate_expr(R, "qv")))
-    qc = _with_sub_vv(qc, m, sub, "__oq__")
-    adc_cols = {}
-    for j, cb in enumerate(codebooks):
-        sl = f"slice(__oq__,{j * sub + 1},{sub})"
-        d2s = ",".join(
-            _dist2_sql(sl, cv, _dot_py(cv, cv), f"__pvv{j}__") for _, cv in cb
-        )
-        adc_cols[f"__adc{j}__"] = F.expr(f"array({d2s})")
-    # one analysis pass for all m ADC tables (see _with_sub_vv)
-    qc = qc.withColumns(adc_cols)
-    qc = qc.drop("__oq__", *[f"__pvv{j}__" for j in range(m)])
-    adc = F.expr(
-        " + ".join(
-            f"element_at(__adc{j}__, CAST(c{j} AS INT) + 1)" for j in range(m)
-        )
-    )
-    scored = cc.alias("c").join(F.broadcast(qc.alias("q")), on="cell").select(
-        F.col("q.vec_id").alias("query_id"),
-        F.col("c.vec_id").alias("cand_id"),
-        adc.cast("long").alias("adc_d2_e6"),
-        F.floor(
-            _dot(F.col("q.qv"), F.col("c.v")) / (F.col("q.qnv") * F.col("c.nv")) * 100000
-        ).cast("long").alias("score_exact_e5"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2_e6"), F.col("cand_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
-
-
-def ivf_pq_opq_residual_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    m: int = 4,
-    n_codes: int = 16,
-    n_centroids: int = 16,
-    nprobe: int = 3,
-    iters: int = 0,
-    model=None,
-) -> DataFrame:
-    """The top rung of the PQ serving ladder — the full FAISS "OPQ,IVF,PQ"
-    composition: coarse cells prune candidates, codes quantize the
-    ROTATED residual R·(v − centroid(cell)), and each (query, probed
-    cell) pair builds its ADC tables on the rotated query residual
-    R·(q − centroid(cell)). Valid because rotating a residual is exactly
-    the residual of the rotated space (R is linear and orthonormal), so
-    rotated-residual ADC approximates original-space distance with BOTH
-    corrections applied: the residual's per-cell recentering AND the
-    rotation's subspace-variance balancing.
-
-    ``model`` is a trained ``(R, codebooks, sub)`` from
-    train_opq_residual (frozen-literals deployment); None trains on
-    ``corpus``. Returns the ivf_pq_topk schema. Shuffle profile
-    identical to every other rung: one cell equi-join against the
-    broadcast query side, one per-query rank window — both the residual
-    subtraction and the rotation fold into literal codegen."""
-    # corpus-side encode/score expressions fuse into the corpus
-    # scan stage: spread a narrow (single-split) scan across the
-    # cores first or they evaluate on ONE task (guide §2.5;
-    # no-op whenever the scan already yields >= cores splits)
-    corpus = spread_scan(corpus)
-    if model is None:
-        cents = train_ivf(corpus, n_centroids=n_centroids, iters=iters)
-        R, codebooks, sub = train_opq_residual(corpus, cents, m=m, n_codes=n_codes)
+    if residual:
+        cc = pq_encode(corpus, codebooks, sub, cents=cents, R=R)
     else:
-        R, codebooks, sub = model
-        m = len(codebooks)
-        cents = train_ivf(corpus, n_centroids=n_centroids, iters=iters)
-    arr = _cents_arr_sql(cents)
-
-    cc = corpus.withColumn(
-        "__cvv__",
-        F.expr(
-            "aggregate(zip_with(v,v,(x,y)->x*y),"
-            "CAST(0.0D AS DOUBLE),(acc,x)->acc+x)"
-        ),
+        cc = _assign_cell(pq_encode(corpus, codebooks, sub, R=R), cents)
+    cc = cc.select("vec_id", "v", "nv", "cell", *[f"c{j}" for j in range(m)])
+    qc = _probe_cells(
+        queries, cents, nprobe,
+        F.col("vec_id"), F.col("v").alias("qv"), F.col("nv").alias("qnv"),
     )
-    cc = cc.withColumn(
-        "cell", trained_cells(F.col("v"), cents, nprobe=1, vv=F.col("__cvv__"))
-    ).drop("__cvv__")
-    cc = cc.withColumn(
-        "__rv__",
-        F.expr(f"zip_with(v, element_at({arr}, CAST(cell AS INT) + 1),(x,y)->x-y)"),
+    qc, vec, tmp = _derive_vec(
+        qc, "qv", fit_cents, R, "__qr__", "__oqr__" if residual else "__oq__"
     )
-    cc = cc.withColumn("__orv__", F.expr(opq_rotate_expr(R, "__rv__")))
-    cc = (
-        _attach_pq_codes(cc, codebooks, sub, "__orv__")
-        .drop("__rv__", "__orv__")
-        .select("vec_id", "v", "nv", "cell", *[f"c{j}" for j in range(m)])
-    )
-
-    vv = F.col("__vv__")
-    qpre = queries.withColumn("__vv__", _dot(F.col("v"), F.col("v")))
-    qc = qpre.select(
-        F.col("vec_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.explode(trained_cells(F.col("v"), cents, nprobe=nprobe, vv=vv)).alias("cell"),
-    )
-    qc = qc.withColumn(
-        "__qr__",
-        F.expr(f"zip_with(qv, element_at({arr}, CAST(cell AS INT) + 1),(x,y)->x-y)"),
-    )
-    qc = qc.withColumn("__oqr__", F.expr(opq_rotate_expr(R, "__qr__")))
-    qc = _with_sub_vv(qc, m, sub, "__oqr__")
+    qc = _with_sub_vv(qc, m, sub, vec)
+    # ADC's defining move: each query materializes its distance table to
+    # EVERY codeword of every subspace ONCE, on the (tiny, broadcast)
+    # query side — m array columns of n_codes entries per query row.
+    # Candidates then pay m element_at LOOKUPS into the broadcast row.
+    # (Inlining the arrays into the post-join projection instead would
+    # re-evaluate all m*n_codes distance expressions PER CANDIDATE —
+    # n_codes/m times the arithmetic ADC exists to avoid.)
     adc_cols = {}
     for j, cb in enumerate(codebooks):
-        sl = f"slice(__oqr__,{j * sub + 1},{sub})"
+        sl = f"slice({vec},{j * sub + 1},{sub})"
         d2s = ",".join(
             _dist2_sql(sl, cv, _dot_py(cv, cv), f"__pvv{j}__") for _, cv in cb
         )
         adc_cols[f"__adc{j}__"] = F.expr(f"array({d2s})")
     # one analysis pass for all m ADC tables (see _with_sub_vv)
     qc = qc.withColumns(adc_cols)
-    qc = qc.drop("__qr__", "__oqr__", *[f"__pvv{j}__" for j in range(m)])
+    qc = qc.drop(*tmp, *[f"__pvv{j}__" for j in range(m)])
     adc = F.expr(
         " + ".join(
             f"element_at(__adc{j}__, CAST(c{j} AS INT) + 1)" for j in range(m)

@@ -16,12 +16,6 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def plan_has(df: DataFrame, needle: str, mode: str = "formatted") -> bool:
-    """Assert-plan-shape helper: e.g. plan_has(df, 'PushedFilters'),
-    plan_has(df, 'BroadcastHashJoin'), plan_has(df, 'WholeStageCodegen')."""
-    return needle in physical_plan(df, mode)
-
-
 class PlanVisitor:
     """Public extensibility hook over the Stream's logical chain — the
     reference's Visitor pattern (streamable/stream.py:106-110,

@@ -7508,7 +7508,7 @@ def ann_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks train on the OFFSET Forgy sample (md5-order rows 17..32):
     the coarse sample's own residuals are identically zero, so the offset
     slice is what keeps the codebooks non-degenerate while staying fully
-    SQL-expressible (operators.similarity.train_pq_residual).
+    SQL-expressible (operators.similarity.train_pq with ``cents``).
 
     Measured on a clustered corpus (the regime IVFPQ exists for) this
     lifts recall@5 over raw-vector PQ at equal bits (see RECALL.md); on
@@ -7521,12 +7521,12 @@ def ann_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast query side, one per-query rank window; the residual
     subtraction folds into the same literal-codebook codegen — zero
     added shuffles, zero added per-candidate arithmetic
-    (operators.similarity.ivf_pq_residual_topk)."""
+    (operators.similarity.ivf_pq_topk with ``residual=True``)."""
     nn = similarity.with_norm(_emb(spark, sf_dir))
     q = nn.where(F.col("vec_id") < 16)
     c = nn.where(F.col("vec_id") >= 16)
-    return similarity.ivf_pq_residual_topk(
-        q, c, k=5, m=4, n_codes=16, n_centroids=16, nprobe=3
+    return similarity.ivf_pq_topk(
+        q, c, k=5, m=4, n_codes=16, n_centroids=16, nprobe=3, residual=True
     )
 
 
@@ -7631,14 +7631,15 @@ def ann_pq_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffle profile identical to ann_pq_adc: one cell equi-join against
     the broadcast query side, one per-query rank window — the rotation
     folds into the same broadcast-side literal codegen
-    (operators.similarity.ivf_pq_opq_topk), zero added shuffles."""
+    (operators.similarity.ivf_pq_topk with ``opq=True``), zero added
+    shuffles."""
     from kioss_spark.queries._opq_model import OPQ_CODEBOOKS, OPQ_R, OPQ_SUB
 
     nn = similarity.with_norm(_emb(spark, sf_dir))
     q = nn.where(F.col("vec_id") < 16)
     c = nn.where(F.col("vec_id") >= 16)
-    return similarity.ivf_pq_opq_topk(
-        q, c, k=5, n_centroids=16, nprobe=3,
+    return similarity.ivf_pq_topk(
+        q, c, k=5, n_centroids=16, nprobe=3, opq=True,
         model=(OPQ_R, OPQ_CODEBOOKS, OPQ_SUB),
     )
 
@@ -7718,7 +7719,7 @@ def ann_pq_opq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
     the residual's per-cell recentering and the rotation's
     subspace-variance balancing.
 
-    The rotation/codebook model is train_opq_residual's frozen
+    The rotation/codebook model is train_opq's (``cents`` given) frozen
     sf0.01-trained output (queries/_opq_model.py, sample_n=256 — the
     4×dim floor; the 64-sample model was exactly determined and
     MEASURABLY overfit, losing to plain residual everywhere). Measured
@@ -7731,7 +7732,7 @@ def ann_pq_opq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shuffle profile identical to every rung: one cell equi-join against
     the broadcast query side, one per-query rank window
-    (operators.similarity.ivf_pq_opq_residual_topk)."""
+    (operators.similarity.ivf_pq_topk with ``residual=True, opq=True``)."""
     from kioss_spark.queries._opq_model import (
         OPQ_RES_CODEBOOKS,
         OPQ_RES_R,
@@ -7741,8 +7742,8 @@ def ann_pq_opq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
     nn = similarity.with_norm(_emb(spark, sf_dir))
     q = nn.where(F.col("vec_id") < 16)
     c = nn.where(F.col("vec_id") >= 16)
-    return similarity.ivf_pq_opq_residual_topk(
-        q, c, k=5, n_centroids=16, nprobe=3,
+    return similarity.ivf_pq_topk(
+        q, c, k=5, n_centroids=16, nprobe=3, residual=True, opq=True,
         model=(OPQ_RES_R, OPQ_RES_CODEBOOKS, OPQ_RES_SUB),
     )
 

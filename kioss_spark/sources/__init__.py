@@ -105,10 +105,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def from_iterable(
     spark: SparkSession, it: Iterable[Any], schema=None, column: str = "value"
 ) -> DataFrame:

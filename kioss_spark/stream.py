@@ -664,11 +664,14 @@ class Stream:
         3. ``defaultParallelism`` for ``spark.range`` plans, else 1
            (in-memory LocalRelation).
 
-        ``sparkPlan`` only runs analysis+planning (no job); ``inputFiles``
-        reads the FileIndex listing cached at ``spark.read`` time.
+        ``executedPlan`` only runs analysis, planning and the preparation
+        rules (no job; under AQE it is the unfinalized initial plan), and
+        unlike ``sparkPlan`` it already carries the exchanges
+        ``EnsureRequirements`` inserts; ``inputFiles`` reads the FileIndex
+        listing cached at ``spark.read`` time.
         """
         df = self._df
-        plan = df._jdf.queryExecution().sparkPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         for line in plan.splitlines():
             if "BroadcastExchange" in line:
                 continue  # broadcast is replication, not a width change

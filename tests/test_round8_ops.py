@@ -31,10 +31,10 @@ def test_train_pq_residual_zero_offset_is_degenerate(spark):
     # exactly zero — a codebook that can only say "no displacement"
     nn = _clustered(spark, n=64, dim=32)
     cents = S.train_ivf(nn, n_centroids=16, iters=0)
-    cb0, _ = S.train_pq_residual(nn, cents, m=4, n_codes=16, offset=0)
+    cb0, _ = S.train_pq(nn, m=4, n_codes=16, cents=cents, offset=0)
     assert all(x == 0.0 for book in cb0 for _, rv in book for x in rv)
     # the default (offset = n_centroids) trains on fresh vectors
-    cb, _ = S.train_pq_residual(nn, cents, m=4, n_codes=16)
+    cb, _ = S.train_pq(nn, m=4, n_codes=16, cents=cents)
     assert any(x != 0.0 for book in cb for _, rv in book for x in rv)
 
 
@@ -43,7 +43,7 @@ def test_pq_encode_residual_training_sample_roundtrips_to_zero(spark):
     # subspace, so its reconstruction error is exactly zero
     nn = _clustered(spark, n=64, dim=32)
     cents = S.train_ivf(nn, n_centroids=16, iters=0)
-    cb, sub = S.train_pq_residual(nn, cents, m=4, n_codes=16)
+    cb, sub = S.train_pq(nn, m=4, n_codes=16, cents=cents)
     sample_ids = {
         r["vec_id"]
         for r in nn.orderBy(
@@ -55,7 +55,7 @@ def test_pq_encode_residual_training_sample_roundtrips_to_zero(spark):
         .limit(32)
         .collect()[16:]
     }
-    enc = S.pq_encode_residual(nn, cents, cb, sub).collect()
+    enc = S.pq_encode(nn, cb, sub, cents=cents).collect()
     by_id = {r["vec_id"]: r for r in enc}
     assert all(by_id[i]["recon_err_e6"] == 0 for i in sample_ids)
     assert any(r["recon_err_e6"] > 0 for r in enc)
@@ -66,9 +66,9 @@ def test_pq_encode_residual_is_narrow(spark):
     # no Exchange anywhere in the encode plan
     nn = _clustered(spark, n=64, dim=32)
     cents = S.train_ivf(nn, n_centroids=16, iters=0)
-    cb, sub = S.train_pq_residual(nn, cents, m=4, n_codes=16)
+    cb, sub = S.train_pq(nn, m=4, n_codes=16, cents=cents)
     plan = (
-        S.pq_encode_residual(nn, cents, cb, sub)
+        S.pq_encode(nn, cb, sub, cents=cents)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -93,7 +93,7 @@ def test_residual_pq_lifts_recall_on_clustered_corpus(spark):
         )
 
     raw = mean_recall(S.ivf_pq_topk(q, c, k=5, m=4, n_codes=16))
-    res = mean_recall(S.ivf_pq_residual_topk(q, c, k=5, m=4, n_codes=16))
+    res = mean_recall(S.ivf_pq_topk(q, c, k=5, m=4, n_codes=16, residual=True))
     assert res > raw, f"residual recall {res} <= raw recall {raw}"
 
 

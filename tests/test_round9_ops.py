@@ -10,6 +10,7 @@ vocab-keyed distinct-word seam).
 import random
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from kioss_spark.operators import unigram as U
@@ -282,7 +283,7 @@ def test_opq_cuts_recon_error_at_equal_bits(spark, sf_dir):
     err_raw = S.pq_encode(nn, cb_raw, sub).agg(
         F.avg("recon_err_e6")
     ).first()[0]
-    err_opq = S.pq_encode_opq(nn, OPQ_R, OPQ_CODEBOOKS, OPQ_SUB).agg(
+    err_opq = S.pq_encode(nn, OPQ_CODEBOOKS, OPQ_SUB, R=OPQ_R).agg(
         F.avg("recon_err_e6")
     ).first()[0]
     assert err_opq < err_raw
@@ -318,7 +319,7 @@ def test_opq_wins_anisotropic_recall(spark):
     }
     opq = {
         (r["query_id"], r["cand_id"])
-        for r in S.ivf_pq_opq_topk(q, c, k=5).collect()
+        for r in S.ivf_pq_topk(q, c, k=5, opq=True).collect()
     }
     assert len(opq & truth) > len(raw & truth)
 
@@ -364,11 +365,11 @@ def test_scd2_history_interval_shapes(spark):
 
 
 def test_opq_residual_identity_rotation_equals_plain_residual(spark):
-    # plumbing equivalence: with R = I and the SAME residual codebooks,
-    # the OPQ∘residual path must reproduce ivf_pq_residual_topk
-    # row-for-row (identity dot is IEEE-exact: 0.0*x terms vanish, the
-    # 1.0*x term passes through) — isolating the rotation as the ONLY
-    # semantic difference between the two rungs
+    # plumbing equivalence: with R = I and the SAME codebooks, each
+    # rotated rung must reproduce its unrotated twin row-for-row — OPQ
+    # over raw vectors vs raw PQ, OPQ∘residual vs residual (identity dot
+    # is IEEE-exact: 0.0*x terms vanish, the 1.0*x term passes through)
+    # — isolating the rotation as the ONLY semantic difference
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(5)
@@ -382,19 +383,33 @@ def test_opq_residual_identity_rotation_equals_plain_residual(spark):
     q = nn.where(F.col("vec_id") < 8)
     c = nn.where(F.col("vec_id") >= 8)
     cents = S.train_ivf(c, n_centroids=16, iters=0)
-    cb, sub = S.train_pq_residual(c, cents, m=4, n_codes=16)
     eye = [[1.0 if i == j else 0.0 for j in range(64)] for i in range(64)]
-    plain = sorted(
-        tuple(r) for r in S.ivf_pq_residual_topk(
-            q, c, k=5, m=4, n_codes=16, n_centroids=16, nprobe=3
-        ).collect()
-    )
-    composed = sorted(
-        tuple(r) for r in S.ivf_pq_opq_residual_topk(
-            q, c, k=5, n_centroids=16, nprobe=3, model=(eye, cb, sub)
-        ).collect()
-    )
-    assert composed == plain
+    for residual in (False, True):
+        cb, sub = S.train_pq(
+            c, m=4, n_codes=16, cents=cents if residual else None
+        )
+        plain = sorted(
+            tuple(r) for r in S.ivf_pq_topk(
+                q, c, k=5, m=4, n_codes=16, n_centroids=16, nprobe=3,
+                residual=residual,
+            ).collect()
+        )
+        composed = sorted(
+            tuple(r) for r in S.ivf_pq_topk(
+                q, c, k=5, n_centroids=16, nprobe=3, residual=residual,
+                opq=True, model=(eye, cb, sub),
+            ).collect()
+        )
+        assert composed == plain
+
+
+def test_ivf_pq_topk_rejects_model_rotation_mismatch():
+    # the rung flags and a given model must agree: a rotation only with
+    # opq=True, and opq=True only with a rotation (checked before any job)
+    with pytest.raises(ValueError, match="rotation"):
+        S.ivf_pq_topk(None, None, opq=True, model=(None, OPQ_CODEBOOKS, OPQ_SUB))
+    with pytest.raises(ValueError, match="rotation"):
+        S.ivf_pq_topk(None, None, model=(OPQ_R, OPQ_CODEBOOKS, OPQ_SUB))
 
 
 @settings(max_examples=8, deadline=None)

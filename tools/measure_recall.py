@@ -19,9 +19,11 @@ Usage: python tools/measure_recall.py [sf_dir] [sf_dir_large]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -111,7 +113,7 @@ def main() -> int:
 
     # --- product quantization: raw-vector vs residual (true IVFPQ) ----------
     pq_raw = topkset(similarity.ivf_pq_topk(q, c, k=5))
-    pq_res = topkset(similarity.ivf_pq_residual_topk(q, c, k=5))
+    pq_res = topkset(similarity.ivf_pq_topk(q, c, k=5, residual=True))
     lines.append(
         f"| IVFPQ raw-vector ADC (m=4, 16 codes, nprobe=3) top-5 recall vs brute force "
         f"| {recall(pq_raw, truth)} |"
@@ -132,7 +134,9 @@ def main() -> int:
     )
 
     pq_opq = topkset(
-        similarity.ivf_pq_opq_topk(q, c, k=5, model=(OPQ_R, OPQ_CODEBOOKS, OPQ_SUB))
+        similarity.ivf_pq_topk(
+            q, c, k=5, opq=True, model=(OPQ_R, OPQ_CODEBOOKS, OPQ_SUB)
+        )
     )
     lines.append(
         f"| IVFPQ OPQ ADC (same bits, frozen sf0.01 rotation at sample_n=256 — "
@@ -142,8 +146,9 @@ def main() -> int:
         f"| {recall(pq_opq, truth)} |"
     )
     pq_or = topkset(
-        similarity.ivf_pq_opq_residual_topk(
-            q, c, k=5, model=(OPQ_RES_R, OPQ_RES_CODEBOOKS, OPQ_RES_SUB)
+        similarity.ivf_pq_topk(
+            q, c, k=5, residual=True, opq=True,
+            model=(OPQ_RES_R, OPQ_RES_CODEBOOKS, OPQ_RES_SUB),
         )
     )
     lines.append(
@@ -156,12 +161,12 @@ def main() -> int:
         c, *similarity.train_pq(c, m=4, n_codes=16)
     ).agg(F.avg("recon_err_e6")).first()[0]
     cents16 = similarity.train_ivf(c, n_centroids=16, iters=0)
-    cb_res, sub_res = similarity.train_pq_residual(c, cents16, m=4, n_codes=16)
-    mean_res_err = similarity.pq_encode_residual(
-        c, cents16, cb_res, sub_res
+    cb_res, sub_res = similarity.train_pq(c, m=4, n_codes=16, cents=cents16)
+    mean_res_err = similarity.pq_encode(
+        c, cb_res, sub_res, cents=cents16
     ).agg(F.avg("recon_err_e6")).first()[0]
-    mean_opq_err = similarity.pq_encode_opq(
-        c, OPQ_R, OPQ_CODEBOOKS, OPQ_SUB
+    mean_opq_err = similarity.pq_encode(
+        c, OPQ_CODEBOOKS, OPQ_SUB, R=OPQ_R
     ).agg(F.avg("recon_err_e6")).first()[0]
     lines.append(
         f"| PQ mean recon_err_e6 at equal bits (fixture): raw vs residual vs OPQ "
@@ -184,7 +189,7 @@ def main() -> int:
     qc_, cc_ = cl.where(F.col("vec_id") < 16), cl.where(F.col("vec_id") >= 16)
     cl_truth = topkset(similarity.cosine_topk(qc_, cc_, k=5, partial=False))
     cl_raw = topkset(similarity.ivf_pq_topk(qc_, cc_, k=5))
-    cl_res = topkset(similarity.ivf_pq_residual_topk(qc_, cc_, k=5))
+    cl_res = topkset(similarity.ivf_pq_topk(qc_, cc_, k=5, residual=True))
     lines.append(
         f"| IVFPQ on a CLUSTERED corpus (16 clusters, noise 0.15, seed 7): raw vs "
         f"RESIDUAL top-5 recall — the per-cell query-residual ADC tables correct "
@@ -194,19 +199,23 @@ def main() -> int:
     # Lloyd-refined coarse quantizer (iters=2): on-mean centroids shrink
     # residual norms — the regime where residual coding pays hardest
     cl_raw2 = topkset(similarity.ivf_pq_topk(qc_, cc_, k=5, iters=2))
-    cl_res2 = topkset(similarity.ivf_pq_residual_topk(qc_, cc_, k=5, iters=2))
+    cl_res2 = topkset(
+        similarity.ivf_pq_topk(qc_, cc_, k=5, iters=2, residual=True)
+    )
     lines.append(
         f"| same clustered corpus, Lloyd-refined coarse quantizer (iters=2, "
         f"on-mean centroids => smaller residuals): raw vs RESIDUAL top-5 recall "
         f"| raw {recall(cl_raw2, cl_truth)}; residual {recall(cl_res2, cl_truth)} |"
     )
-    cl_opq = topkset(similarity.ivf_pq_opq_topk(qc_, cc_, k=5))
+    cl_opq = topkset(similarity.ivf_pq_topk(qc_, cc_, k=5, opq=True))
     lines.append(
         f"| same clustered corpus, OPQ (rotation trained on it) top-5 recall "
         f"| {recall(cl_opq, cl_truth)} |"
     )
-    cl_or = topkset(similarity.ivf_pq_opq_residual_topk(qc_, cc_, k=5))
-    cl_or2 = topkset(similarity.ivf_pq_opq_residual_topk(qc_, cc_, k=5, iters=2))
+    cl_or = topkset(similarity.ivf_pq_topk(qc_, cc_, k=5, residual=True, opq=True))
+    cl_or2 = topkset(
+        similarity.ivf_pq_topk(qc_, cc_, k=5, iters=2, residual=True, opq=True)
+    )
     lines.append(
         f"| same clustered corpus, the FULL composition (OPQ over residuals — "
         f"FAISS 'OPQ,IVF,PQ'): Forgy coarse vs Lloyd-refined coarse (iters=2) "
@@ -229,9 +238,9 @@ def main() -> int:
     qa_, ca_ = an.where(F.col("vec_id") < 16), an.where(F.col("vec_id") >= 16)
     an_truth = topkset(similarity.cosine_topk(qa_, ca_, k=5, partial=False))
     an_raw = topkset(similarity.ivf_pq_topk(qa_, ca_, k=5))
-    an_res = topkset(similarity.ivf_pq_residual_topk(qa_, ca_, k=5))
-    an_opq = topkset(similarity.ivf_pq_opq_topk(qa_, ca_, k=5))
-    an_or = topkset(similarity.ivf_pq_opq_residual_topk(qa_, ca_, k=5))
+    an_res = topkset(similarity.ivf_pq_topk(qa_, ca_, k=5, residual=True))
+    an_opq = topkset(similarity.ivf_pq_topk(qa_, ca_, k=5, opq=True))
+    an_or = topkset(similarity.ivf_pq_topk(qa_, ca_, k=5, residual=True, opq=True))
     lines.append(
         f"| IVFPQ on an ANISOTROPIC corpus (decaying spectrum, random basis, "
         f"seeded — the geometry a learned rotation exists for, pinned: "
@@ -244,7 +253,7 @@ def main() -> int:
         ca_, *similarity.train_pq(ca_, m=4, n_codes=16)
     ).agg(F.avg("recon_err_e6")).first()[0]
     Ra, cba, suba = similarity.train_opq(ca_, m=4, n_codes=16)
-    an_err_opq = similarity.pq_encode_opq(ca_, Ra, cba, suba).agg(
+    an_err_opq = similarity.pq_encode(ca_, cba, suba, R=Ra).agg(
         F.avg("recon_err_e6")
     ).first()[0]
     lines.append(
@@ -326,7 +335,7 @@ def main() -> int:
         )
 
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/RECALL.md", "w") as f:
+    with open(os.path.join(REPO, "RECALL.md"), "w") as f:
         f.write(out)
     print(out)
     return 0
