@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kioss_spark.queries import load_all  # noqa: E402
 from kioss_spark.session import get_spark  # noqa: E402
+from kioss_spark.sources import load_table  # noqa: E402
 
 #: headline set — relational + facade + (as they land) LLM-data operators
 HEADLINE = [
@@ -251,9 +252,18 @@ def _warm(spark) -> None:
 
 
 def _warm_tables(spark, sf_dir: str) -> None:
-    # parquet footers/metadata for every table the headliners scan
+    # parquet footers/metadata for every table the headliners scan; through
+    # load_table, so the timed runs find its schema memo warm, as a
+    # long-lived session does
     for tbl in ("lineitem", "orders", "customer", "events", "documents", "embeddings"):
-        spark.read.parquet(f"{sf_dir}/{tbl}.parquet").count()
+        load_table(spark, sf_dir, tbl).count()
+
+
+def _codegen_compiles(spark) -> int:
+    """Whole-stage classes Janino has compiled in this JVM so far (a
+    codegen-cache miss each)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _structural_pass(spark, registry, sf_dir: str) -> dict[str, dict]:
@@ -303,21 +313,24 @@ def _host_state() -> dict:
     """Attributability stamp (round-13 verdict ask 8): load average +
     uptime BEFORE the run, so round-over-round deltas can be classified
     as engine vs neighbor-contention (this host has documented
-    multi-second contention windows).  ``idle`` is the headline bit:
-    1-minute load under 2 on this 32-way box means nothing substantial
-    was competing when the run started."""
+    multi-second contention windows).  ``idle`` is the headline bit: the
+    1-, 5- and 15-minute loads all under a quarter of the host's cores
+    means nothing substantial was competing when the run started, nor
+    in the quarter hour before it (a low load1 alone can be a lull in a
+    busy period)."""
     try:
         with open("/proc/loadavg") as f:
             l1, l5, l15 = (float(x) for x in f.read().split()[:3])
         with open("/proc/uptime") as f:
             up = float(f.read().split()[0])
+        cpus = os.cpu_count()
         return {
             "load1": l1,
             "load5": l5,
             "load15": l15,
             "uptime_s": round(up),
-            "cpus": os.cpu_count(),
-            "idle": l1 < 2.0,
+            "cpus": cpus,
+            "idle": max(l1, l5, l15) < 0.25 * cpus,
         }
     except OSError:  # pragma: no cover - non-linux fallback
         return {"idle": None}
@@ -340,6 +353,7 @@ def main() -> None:
     timings: dict[str, float | str | None] = {}
     build: dict[str, float] = {}
     serve: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     missing: list[str] = []
     errors: list[str] = []
     for _ in range(repeats):
@@ -354,6 +368,7 @@ def main() -> None:
                 continue
             if isinstance(timings.get(name), str):
                 continue  # errored with no good timing yet; don't re-raise
+            c0 = _codegen_compiles(spark)
             t0 = time.perf_counter()
             try:
                 # per-query isolation: one broken headliner must never take
@@ -378,6 +393,9 @@ def main() -> None:
                 print(f"bench: {name} failed: {exc}", file=sys.stderr)
                 continue
             elapsed = round(time.perf_counter() - t0, 3)
+            # codegen-cache misses summed over the query's timed runs; a
+            # repeat whose classes are all still cached adds 0
+            compiles[name] = compiles.get(name, 0) + _codegen_compiles(spark) - c0
             prev = timings.get(name)
             if prev is None or not isinstance(prev, float) or elapsed < prev:
                 timings[name] = elapsed
@@ -405,6 +423,7 @@ def main() -> None:
         "queries": timings,
         "build": build,
         "serve": serve,
+        "codegen_compiles": compiles,
         "struct": struct,
         "jobs_total": jobs_total,
         "shuffles_total": shuffles_total,

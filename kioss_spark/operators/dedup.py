@@ -782,7 +782,7 @@ def connected_components(
     clusters are short chains, so single digits in practice — while the
     data never leaves the cluster: each round is one keyed shuffle
     (neighbor min per node) exactly like GraphX/GraphFrames CC. Lineage is
-    truncated per round with an eager localCheckpoint (an iterative
+    truncated per round with a localCheckpoint (an iterative
     algorithm re-plans from its previous materialized state; without the
     cut, round k replays rounds 1..k-1).
 
@@ -803,9 +803,15 @@ def connected_components(
       state is a LAZY localCheckpoint (plan truncated to a LogicalRDD
       immediately; partitions cached on first full computation), and the
       full count of changed rows both materializes the round and answers
-      "did anything change?" — ONE job per round where eager-checkpoint +
+      "did anything change?" — ONE action per round where eager-checkpoint +
       separate probe cost two (round-5: the fixed ~1 s/round driver
-      overhead dominated fixture-scale graph queries). The count must be
+      overhead dominated fixture-scale graph queries). In Spark jobs a round
+      costs more: under AQE the lazy localCheckpoint still runs the round's
+      shuffle stages when it is called, and the count runs 2 more, so a
+      round is 4 jobs. Measured on dedup_cluster_best (perfbench ``small``
+      seed-44 input, 4 cores): 17, 4, 4, 4 over its four rounds, where
+      round 1 also materializes the candidate-pair pipeline (15 of its 17
+      jobs come from the checkpoint call). The count must be
       a FULL count, not limit(1): a partial scan would leave partitions
       uncomputed, and an un-materialized lazy checkpoint does not
       truncate lineage, so the next round would replay the pipeline.

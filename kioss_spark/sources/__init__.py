@@ -10,6 +10,7 @@ Everything here returns a plain DataFrame; the ``Stream`` facade wraps it.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Iterable
 from typing import Any
 
@@ -86,6 +87,41 @@ def read_binaryfiles(spark: SparkSession, path: str, glob=None) -> DataFrame:
     return reader.load(path)
 
 
+#: session confs that change what parquet schema inference returns for the
+#: same files; part of the schema memo's key
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: per-session schema memo: SparkSession -> {path: (stamp, schema)}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _table_stamp(spark: SparkSession, path: str) -> tuple:
+    """What the inferred schema of ``path`` depends on: (path, length,
+    modification time) of every file under it, listed through the Hadoop
+    FileSystem of its scheme, plus the session's inference confs. A path
+    that matches nothing stamps no files, so the read that follows raises
+    Spark's own not-found error."""
+    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+    files, todo = [], list(fs.globStatus(jp) or [])
+    while todo:
+        st = todo.pop()
+        if st.isDirectory():
+            todo.extend(fs.listStatus(st.getPath()))
+        else:
+            files.append(
+                (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            )
+    return tuple(sorted(files)), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver test table, e.g. load_table(spark, sf_dir, 'lineitem').
 
@@ -96,8 +132,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     truncation DuckDB applies; sessions built with the legacy
     ``nanosAsLong`` flag deliver epoch-nanos bigint instead — ``to_ntz``
     normalizes every variant (see kioss_spark.functions.timeutil).
+
+    Schema memo: parquet schema inference is a one-task Spark job per read,
+    so each session remembers the schema it inferred for a path and reads
+    with it given on later loads (no job; same plan and rows). The key is
+    the path, the length and modification time of every file under it, and
+    the session's parquet-inference confs (``_SCHEMA_CONFS``). Rewriting,
+    adding or removing a file, or changing one of those confs, is a miss:
+    the table is read and its schema inferred as without the memo, and the
+    entry for the path is replaced. The memo lives as long as the session.
+    An in-place rewrite is seen through the length or the modification
+    time; one that keeps the length and lands within the file system's
+    timestamp resolution would be a stale hit.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _table_stamp(spark, path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == stamp:
+        df = spark.read.schema(hit[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        memo[path] = (stamp, df.schema)
     if name == "events":
         from kioss_spark.functions.timeutil import to_ntz
 
