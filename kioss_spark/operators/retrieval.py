@@ -748,22 +748,11 @@ def bm25_phrase_topk(
         )
     )
     matched = tfdl.join(F.broadcast(qterms), "term")
-    # ONE pinned-width (query, doc) exchange shared by both lanes: the
-    # bow and phrase branches otherwise each re-run the postings join
-    # and aggregate through their own exchange, which AQE coalesces to
-    # 1-2 tasks on byte size while the phrase position-fold is CPU-dense
-    # (profiled: 1.3 s single-task fold stages at sf0.1).  Repartitioning
-    # by a PREFIX of both lanes' grouping keys lets each aggregate run
-    # exchange-free on top of it (hash(query, doc) clusters (query, doc,
-    # term) too), the join+window compute once, and the explicit width
-    # pins the fold at full parallelism (REPARTITION_BY_NUM is not
-    # AQE-coalesced; guide §2.4 share-one-exchange, §2.5 CPU-dense
-    # small-bytes stages).
-    matched = matched.repartition(
-        matched.sparkSession.sparkContext.defaultParallelism,
-        "query_id",
-        "doc_id",
-    )
+    # no exchange is pinned here: each lane's aggregate shuffles on its
+    # own keys and AQE sizes it.  A shared
+    # repartition(defaultParallelism, query_id, doc_id) baked the core
+    # count into the plan and was 8-24 % slower than none at both 4 and
+    # 8 cores (phrase and proximity top-k at sf0.1, best-of-3).
     # bag-of-words lane: one contribution per DISTINCT (query, term) even
     # when a phrase repeats a term at two offsets
     bow = (

@@ -2441,6 +2441,8 @@ def zorder_event_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# No oracle by design: file boundaries are physical layout, which DuckDB
+# cannot see, so a rows-only (``no_oracle``) result here is expected.
 @register("layout_small_files_audit", oracle=None)
 def layout_small_files_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Written-layout health audit of the documents table: file count,

@@ -9,7 +9,9 @@ exactly-once delivery the ENGINE's job instead of a manual
 
 Planning (driver-side, file-grain, pure-filesystem — the API gives the
 planner no SparkSession, and none is needed: snapshot parquet is read
-with pyarrow, bounded by n_files x window):
+with pyarrow, bounded by n_files x window).  With no py4j there is no
+Hadoop FileSystem either, so the planner and reader take LOCAL paths
+only (bare or ``file:``) and refuse any other scheme:
 
 - ``latestOffset`` advances only to COMPLETE snapshots whose every batch
   holds its ``commits/b{id}`` marker.  An unmarked batch is a writer's
@@ -67,11 +69,12 @@ SOURCE_NAME = "manifest_feed"
 
 
 def _local(path: str) -> str:
-    """Strip the file: scheme Hadoop stamps on local paths."""
-    if path.startswith("file://"):
-        return path[len("file:"):]
+    """POSIX path of a bare or ``file:`` location; any other scheme is
+    refused (the planner has no Hadoop FileSystem to read it with)."""
     if path.startswith("file:"):
         return path[len("file:"):]
+    if "://" in path:
+        raise ValueError(f"{SOURCE_NAME} reads local paths only: {path}")
     return path
 
 

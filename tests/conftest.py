@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -30,3 +31,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def viewfs_root(spark, tmp_path):
+    """``tmp_path`` mounted at ``viewfs://<authority>/m``: a non-``file``
+    scheme over local disk, so manifest code runs its portable Hadoop
+    ``FileSystem`` path.  The authority is unique per test because Hadoop
+    caches one FileSystem per (scheme, authority)."""
+    authority = f"kt{uuid.uuid4().hex[:12]}"
+    key = f"fs.viewfs.mounttable.{authority}.link./m"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    hconf.set(key, f"file://{tmp_path}")
+    yield f"viewfs://{authority}/m"
+    hconf.unset(key)
+
+
+@pytest.fixture(params=["bare", "viewfs"])
+def fs_root(request, tmp_path):
+    """A writable root, once as a bare local path and once on viewfs."""
+    if request.param == "bare":
+        return str(tmp_path)
+    return request.getfixturevalue("viewfs_root")

@@ -86,11 +86,11 @@ def test_all_nan_file_stays_candidate_everywhere(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_pre_snapshot_manifest_layout_is_refused(spark, tmp_path):
+def test_pre_snapshot_manifest_layout_is_refused(spark, fs_root):
     from kioss_spark.operators.skew import read_manifest, stats_index
 
-    data = str(tmp_path / "data")
-    man = str(tmp_path / "man")
+    data = f"{fs_root}/data"
+    man = f"{fs_root}/man"
     df = _mk_events(spark, 60)
     # fake the pre-round-12 layout: per-batch stats DELTAS in v{batch}
     # dirs, no batch_id column

@@ -43,7 +43,7 @@ def _mk(spark, n=600, batches=6):
 # ---------------------------------------------------------------------------
 
 
-def test_delta_commits_and_checkpoint_cadence(spark, tmp_path):
+def test_delta_commits_and_checkpoint_cadence(spark, fs_root):
     """First commit = checkpoint, steady state = deltas, a checkpoint
     forced at the interval; every version reads exactly."""
     from kioss_spark.operators import skew
@@ -53,7 +53,7 @@ def test_delta_commits_and_checkpoint_cadence(spark, tmp_path):
         read_via_manifest,
     )
 
-    data, man = str(tmp_path / "d"), str(tmp_path / "m")
+    data, man = f"{fs_root}/d", f"{fs_root}/m"
     nb = skew._CHECKPOINT_INTERVAL + 2  # crosses one forced checkpoint
     df = _mk(spark, n=50 * nb, batches=nb)
     sink = manifest_sink(data, man, ["u"])
@@ -101,7 +101,7 @@ def test_delta_replay_replaces_not_duplicates(spark, tmp_path):
     assert _rows(got, "u", "payload") == _rows(df.drop("b"), "u", "payload")
 
 
-def test_delete_and_compact_commit_as_deltas(spark, tmp_path):
+def test_delete_and_compact_commit_as_deltas(spark, fs_root):
     """manifest_delete writes an O(affected) delta; compact_manifest an
     O(selected+new) delta; both fold back exactly and the zero-job
     facade count stays exact through the folded head."""
@@ -113,7 +113,7 @@ def test_delete_and_compact_commit_as_deltas(spark, tmp_path):
     )
     from kioss_spark.stream import Stream
 
-    data, man = str(tmp_path / "d"), str(tmp_path / "m")
+    data, man = f"{fs_root}/d", f"{fs_root}/m"
     df = _mk(spark, n=300, batches=3)
     sink = manifest_sink(data, man, ["u"])
     for b in range(3):
@@ -817,8 +817,13 @@ def test_shallow_clone_isolation_and_guards(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("seed", [11, 23, 47])
-def test_manifest_lifecycle_matches_model(spark, tmp_path, seed):
+@pytest.mark.parametrize(
+    "seed, scheme",
+    [(11, "bare"), (23, "bare"), (47, "bare"), (11, "viewfs")],
+    ids=["11", "23", "47", "11-viewfs"],
+)
+def test_manifest_lifecycle_matches_model(request, spark, tmp_path, seed,
+                                         scheme):
     """Seeded randomized op sequences (ingest / range + point delete /
     compact / restore / vacuum) against a pure-Python reference model:
     after EVERY op the served table equals the model EXACTLY, the
@@ -840,7 +845,12 @@ def test_manifest_lifecycle_matches_model(spark, tmp_path, seed):
     from kioss_spark.stream import Stream
 
     rng = random.Random(seed)
-    data, man = str(tmp_path / "d"), str(tmp_path / "m")
+    root = (
+        request.getfixturevalue("viewfs_root")
+        if scheme == "viewfs"
+        else str(tmp_path)
+    )
+    data, man = f"{root}/d", f"{root}/m"
     model: dict = {}  # payload -> u (payload unique by construction)
     history: dict = {}  # snapshot seq -> frozen model items
     colhist: dict = {}  # snapshot seq -> logical column name then

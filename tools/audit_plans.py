@@ -16,10 +16,12 @@ Usage: python tools/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from kioss_spark.session import get_spark  # noqa: E402
 from kioss_spark.queries import load_all  # noqa: E402
@@ -166,7 +168,7 @@ def main() -> int:
         "reads mean the projection reached the scan).",
     ]
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/PLAN_AUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as f:
         f.write(out)
     print(out)
     print(f"flagged: {flags}" if flags else "no unexpected plan properties")

@@ -13,10 +13,12 @@ Usage: python tools/bench_streaming.py [seconds_per_pipeline]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -125,7 +127,7 @@ def main() -> int:
         lines.append(f"| {name} | {rows:,} | {rps:,.0f} |")
         print(name, rows, f"{rps:,.0f}/s", flush=True)
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/STREAM_BENCH.md", "w") as f:
+    with open(os.path.join(REPO, "STREAM_BENCH.md"), "w") as f:
         f.write(out)
     return 0
 

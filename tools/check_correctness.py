@@ -22,7 +22,8 @@ from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from kioss_spark.session import get_spark  # noqa: E402
 from kioss_spark.sources import TABLES  # noqa: E402
@@ -34,7 +35,7 @@ def plain_spark():
     """Mimic the driver's session: SparkSession.builder with no configs."""
     from pyspark.sql import SparkSession
 
-    b = SparkSession.builder.master("local[8]").appName("check_plain")
+    b = SparkSession.builder.master("local[*]").appName("check_plain")
     tz = os.environ.get("PLAIN_TZ")
     if tz:
         b = b.config("spark.sql.session.timeZone", tz)

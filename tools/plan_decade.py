@@ -17,6 +17,7 @@ Run:  python tools/plan_decade.py [n_files ...]   (default 500 5000 50000)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -44,7 +45,9 @@ def synth_stats(spark, n_files: int, n_cands: int):
 
 
 def main() -> None:
-    sys.path.insert(0, ".")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from pyspark.sql import SparkSession
 
     from kioss_spark.operators.skew import (
@@ -55,7 +58,7 @@ def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [500, 5000, 50000]
     n_cands = 10
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master("local[*]")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", "8")
         .getOrCreate()

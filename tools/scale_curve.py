@@ -28,10 +28,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from kioss_spark.queries import load_all  # noqa: E402
 from kioss_spark.session import get_spark  # noqa: E402
@@ -202,14 +204,14 @@ def main() -> int:
     # preserve manually-authored sections (synthetic 10x extension,
     # per-round refreshes) appended after the generated table
     try:
-        existing = open("/root/repo/SCALE_CURVE.md").read()
+        existing = open(os.path.join(REPO, "SCALE_CURVE.md")).read()
         marker = "\n## "
         idx = existing.find(marker)
         if idx != -1:
             out = out + existing[idx:]
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALE_CURVE.md", "w") as f:
+    with open(os.path.join(REPO, "SCALE_CURVE.md"), "w") as f:
         f.write(out)
     print(out)
     return 0
